@@ -2541,74 +2541,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Run scripts/gate_staleness.py to plan each rotation; `--check` FAILS
     # if this ordering wastes gate slots on fresh queries while staler
     # ones wait (the r10 miss, mechanized — see tests/test_entry.py).
-    # Round-16 gate (ledger at COVERAGE.md "Gate-rotation ledger"): no
-    # new operators this round (optimization only), so the gate is pure
-    # debt payment — the 10 r12-greens the r15 rotation displaced
-    # (q61/q62/q93/q94/q96/q98-q102, the r15 verdict's item 5) plus the
-    # 40 stalest r13-greens in gate_staleness.py ledger order.
+    # Round-17 gate (ledger at COVERAGE.md "Gate-rotation ledger"): no
+    # query code changed this round, so the gate is pure debt payment —
+    # the 10 r13-greens displaced by r16's 50-slot cap
+    # (q36/q37/q41/q43/q11/q12/q15/q19/q21/q28) plus the 40 stalest
+    # r14-greens in gate_staleness.py ledger order.
     return {
-        # ===== r16 gate (first 50): the 50-stalest oracle-backed set =====
-        # Ledger: COVERAGE.md "Gate-rotation ledger" r16 row. The 10
-        # r12-greens displaced by r15's new-operator slots lead (the
-        # r15 verdict's item 5), then the 40 stalest r13-greens in
-        # gate_staleness.py ledger order. Total stale debt is 60 > 50
-        # slots, so this is the strongest satisfiable form (a 50-stalest
-        # set); the 10 remaining r13 rows lead the tail as r17's first
-        # debt.
-        # --- r12 cohort (last driver-green r12) ---
-        "q61_unigram_logprob": q61_unigram_logprob,
-        "q62_embed_dup_clusters": q62_embed_dup_clusters,
-        "q93_syndication_capped": q93_syndication_capped,
-        "q94_language_mix": q94_language_mix,
-        "q96_curriculum_buckets": q96_curriculum_buckets,
-        "q98_line_dedup": q98_line_dedup,
-        "q99_tokenizer_fertility": q99_tokenizer_fertility,
-        "q100_training_pipeline": q100_training_pipeline,
-        "q101_incremental_pipeline": q101_incremental_pipeline,
-        "q102_conversation_lint": q102_conversation_lint,
-        # --- 40 stalest r13-greens, ledger order ---
-        "q126_sft_tokens": q126_sft_tokens,  # token-space SFT loss masks
-        "q127_media_store_audit": q127_media_store_audit,  # media store health card
-        "q128_bm25_impact": q128_bm25_impact,  # impact-ordered BM25 serving
-        "q129_extend_vocab": q129_extend_vocab,  # id-stable vocab evolution
-        "q130_preference_pairs": q130_preference_pairs,  # DPO pair assembly
-        "q131_dpo_tokens": q131_dpo_tokens,  # DPO paired token samples
-        "q132_purge_packed": q132_purge_packed,  # trainer-shard document purge
-        "q133_semantic_pack": q133_semantic_pack,  # in-context-pretraining layout
-        "q134_ppl_buckets": q134_ppl_buckets,  # CCNet head/middle/tail split
-        "q135_memorization_probe": q135_memorization_probe,  # verbatim-overlap audit
-        "q136_ivf_store": q136_ivf_store,  # IVF store lifecycle (build+append+serve)
-        "q137_bm25_delete": q137_bm25_delete,  # exact index deletes (K4 on the lexical store)
-        "q138_doremi_weights": q138_doremi_weights,  # DoReMi domain reweighting (unigram proxy)
-        "q139_corpus_diff": q139_corpus_diff,  # snapshot lineage (added/removed/changed)
-        "q140_excess_loss": q140_excess_loss,  # RHO-style excess-loss selection
-        "q141_hard_negatives": q141_hard_negatives,  # BM25 hard-negative mining
-        "q142_decontaminate_multi": q142_decontaminate_multi,  # multi-suite contamination matrix
-        "q143_distinct_ngrams": q143_distinct_ngrams,  # distinct-n diversity per source
-        "q144_filter_agreement": q144_filter_agreement,  # quality-gate agreement matrix
-        "q145_best_of_n": q145_best_of_n,  # rejection-sampling winner selection
-        "q146_soft_dedup": q146_soft_dedup,  # SoftDeDup commonness reweighting
-        "q147_vector_negatives": q147_vector_negatives,  # embedding-space negative mining
-        "q148_epoch_plan": q148_epoch_plan,  # mixture repetition forecast
-        "q149_signal_correlation": q149_signal_correlation,  # quality-signal Pearson matrix
-        "q150_cluster_safe_splits": q150_cluster_safe_splits,  # near-dup-cluster split assignment
-        "q151_semantic_mixture": q151_semantic_mixture,  # domain-discovery mixture
-        "q103_squeeze_lines": q103_squeeze_lines,
-        "q104_build_vocab": q104_build_vocab,
-        "q82_mixture_weights": q82_mixture_weights,
-        "q80_length_outliers": q80_length_outliers,
-        "q03_topk_orders": q03_topk_orders,
-        "q05_region_customers": q05_region_customers,
-        "q07_cumulative_spend": q07_cumulative_spend,
-        "q08_union_slices": q08_union_slices,
-        "q10_top3_per_customer": q10_top3_per_customer,
-        "q04_orders_per_customer": q04_orders_per_customer,
-        "q06_events_dedup": q06_events_dedup,
-        "q13_lang_distribution": q13_lang_distribution,
-        "q32_order_revenue": q32_order_revenue,
-        "q33_events_inventory": q33_events_inventory,
-        # ================= tail (entry 51+) =================
-        # 10 r13-greens displaced by the 50-slot cap: r17's first debt
+        # ===== r17 gate (first 50): the 50-stalest oracle-backed set =====
+        # Ledger: COVERAGE.md "Gate-rotation ledger" r17 row. 10
+        # r13-greens displaced by r16's cap + 40 stalest r14-greens;
+        # total stale debt is 60 > 50 slots, so this is the strongest
+        # satisfiable form (a 50-stalest set); the 10 remaining r14 rows
+        # lead the tail as r18's first debt.
+        # --- 10 r13-greens displaced by r16's cap (last driver-green r13) ---
         "q36_pagination": q36_pagination,
         "q37_source_projection": q37_source_projection,
         "q41_semi_join": q41_semi_join,
@@ -2619,7 +2564,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q19_knn_brute": q19_knn_brute,
         "q21_vector_search_docs": q21_vector_search_docs,
         "q28_winnowing": q28_winnowing,
-        # r14-green cohort, ledger order (freshest below)
+        # --- 40 stalest r14-greens, ledger order ---
         "q152_bm25_append": q152_bm25_append,  # NEW r14: LSM segment appends on the lexical index
         "q153_purge_accounting": q153_purge_accounting,  # NEW r14: RTBF store-lifecycle ledger
         "q154_media_dup_clusters": q154_media_dup_clusters,  # NEW r14: near-dup over a media store's vectors
@@ -2660,6 +2605,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q66_token_budget_mix": q66_token_budget_mix,
         "q67_quantized_search": q67_quantized_search,
         "q110_span_dedup_keep_one": q110_span_dedup_keep_one,
+        # ================= tail (entry 51+) =================
+        # 10 r14-greens displaced by the 50-slot cap: r18's first debt
         "q111_blocklist_lines": q111_blocklist_lines,
         "q112_fix_mojibake": q112_fix_mojibake,
         "q106_span_dedup": q106_span_dedup,
@@ -2670,7 +2617,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q107_ivf_health": q107_ivf_health,
         "q68_overlap_pairs": q68_overlap_pairs,
         "q69_quantized_ivf": q69_quantized_ivf,
-        # r15-green cohort (the r15 gate): freshest last
+        # r15-green cohort, ledger order (freshest below)
         "q156_ivf_filtered_serving": q156_ivf_filtered_serving,  # NEW r15: filtered kNN inside the IVF store
         "q157_cluster_store": q157_cluster_store,  # NEW r15: O(delta) incremental cluster maintenance
         "q158_pq_ivf": q158_pq_ivf,  # NEW r15: product-quantized IVF serving (ADC)
@@ -2721,6 +2668,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q58_pii_scan": q58_pii_scan,
         "q59_repetition_quality": q59_repetition_quality,
         "q60_decontaminate": q60_decontaminate,
+        # r16-green cohort (the outgoing r16 gate): freshest last
+        "q61_unigram_logprob": q61_unigram_logprob,
+        "q62_embed_dup_clusters": q62_embed_dup_clusters,
+        "q93_syndication_capped": q93_syndication_capped,
+        "q94_language_mix": q94_language_mix,
+        "q96_curriculum_buckets": q96_curriculum_buckets,
+        "q98_line_dedup": q98_line_dedup,
+        "q99_tokenizer_fertility": q99_tokenizer_fertility,
+        "q100_training_pipeline": q100_training_pipeline,
+        "q101_incremental_pipeline": q101_incremental_pipeline,
+        "q102_conversation_lint": q102_conversation_lint,
+        "q126_sft_tokens": q126_sft_tokens,  # token-space SFT loss masks
+        "q127_media_store_audit": q127_media_store_audit,  # media store health card
+        "q128_bm25_impact": q128_bm25_impact,  # impact-ordered BM25 serving
+        "q129_extend_vocab": q129_extend_vocab,  # id-stable vocab evolution
+        "q130_preference_pairs": q130_preference_pairs,  # DPO pair assembly
+        "q131_dpo_tokens": q131_dpo_tokens,  # DPO paired token samples
+        "q132_purge_packed": q132_purge_packed,  # trainer-shard document purge
+        "q133_semantic_pack": q133_semantic_pack,  # in-context-pretraining layout
+        "q134_ppl_buckets": q134_ppl_buckets,  # CCNet head/middle/tail split
+        "q135_memorization_probe": q135_memorization_probe,  # verbatim-overlap audit
+        "q136_ivf_store": q136_ivf_store,  # IVF store lifecycle (build+append+serve)
+        "q137_bm25_delete": q137_bm25_delete,  # exact index deletes (K4 on the lexical store)
+        "q138_doremi_weights": q138_doremi_weights,  # DoReMi domain reweighting (unigram proxy)
+        "q139_corpus_diff": q139_corpus_diff,  # snapshot lineage (added/removed/changed)
+        "q140_excess_loss": q140_excess_loss,  # RHO-style excess-loss selection
+        "q141_hard_negatives": q141_hard_negatives,  # BM25 hard-negative mining
+        "q142_decontaminate_multi": q142_decontaminate_multi,  # multi-suite contamination matrix
+        "q143_distinct_ngrams": q143_distinct_ngrams,  # distinct-n diversity per source
+        "q144_filter_agreement": q144_filter_agreement,  # quality-gate agreement matrix
+        "q145_best_of_n": q145_best_of_n,  # rejection-sampling winner selection
+        "q146_soft_dedup": q146_soft_dedup,  # SoftDeDup commonness reweighting
+        "q147_vector_negatives": q147_vector_negatives,  # embedding-space negative mining
+        "q148_epoch_plan": q148_epoch_plan,  # mixture repetition forecast
+        "q149_signal_correlation": q149_signal_correlation,  # quality-signal Pearson matrix
+        "q150_cluster_safe_splits": q150_cluster_safe_splits,  # near-dup-cluster split assignment
+        "q151_semantic_mixture": q151_semantic_mixture,  # domain-discovery mixture
+        "q103_squeeze_lines": q103_squeeze_lines,
+        "q104_build_vocab": q104_build_vocab,
+        "q82_mixture_weights": q82_mixture_weights,
+        "q80_length_outliers": q80_length_outliers,
+        "q03_topk_orders": q03_topk_orders,
+        "q05_region_customers": q05_region_customers,
+        "q07_cumulative_spend": q07_cumulative_spend,
+        "q08_union_slices": q08_union_slices,
+        "q10_top3_per_customer": q10_top3_per_customer,
+        "q04_orders_per_customer": q04_orders_per_customer,
+        "q06_events_dedup": q06_events_dedup,
+        "q13_lang_distribution": q13_lang_distribution,
+        "q32_order_revenue": q32_order_revenue,
+        "q33_events_inventory": q33_events_inventory,
     }
 
 
