@@ -3,9 +3,13 @@
 The reference stores 768-dim cosine-metric vectors and validates dims at write
 and query time (reference: worker/app/services/qdrant_client.py:339-351,502-505,
 worker/app/config.py:41-42). Here a vector is an ``array<float|double>`` column
-and similarity is a ``zip_with`` + ``aggregate`` expression, which Catalyst
-keeps inside codegen — at 100 TB this beats any Python UDF by orders of
-magnitude and needs no shuffle at all (embarrassingly parallel map).
+and similarity is a ``zip_with`` + ``aggregate`` expression — no UDF, no
+Python worker, no shuffle (an embarrassingly parallel map). In Spark 4.1
+``ZipWith``/``ArrayAggregate``/``ArrayTransform`` are ``CodegenFallback``:
+the whole stage is still generated, but these nodes are evaluated
+interpreted, once per row, inside it — so what a kernel allocates per
+ELEMENT (a struct, a boxed double) is its hot loop, and the fewer
+per-element terms a score folds the faster it runs.
 
 Determinism note: ``aggregate`` folds left-to-right sequentially per row, so a
 double-precision score is bit-identical across runs and partitionings — which is
@@ -16,6 +20,49 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# dtype -> (big-endian numpy dtype, JVM primitive, java.nio view method)
+_JAVA_ARRAYS = {
+    "double": (">f8", "double", "asDoubleBuffer"),
+    "int": (">i4", "int", "asIntBuffer"),
+}
+
+
+def vec_lit(vec, dtype: str = "double") -> Column:
+    """A driver-side vector as ONE array literal (``array<double>`` or
+    ``array<int>``), built in a constant number of JVM calls.
+
+    ``F.array(*[F.lit(x) for x in vec])`` costs four Py4J round trips per
+    element and plans a ``CreateArray`` with ``len(vec)`` children — ~270 ms
+    of driver time for a 768-dim query. Even ``F.lit(ndarray)`` fills its
+    Java array one Py4J
+    ``setitem`` per slot (~45 ms). Here the values cross once as a
+    big-endian byte string and are copied into a Java ``double[]``/``int[]``
+    by a ``java.nio`` buffer view: IEEE bits are shipped, never a decimal
+    repr, so every value is exactly the Python one. Needs an active classic
+    SparkContext, as ``F.lit`` does.
+    """
+    import numpy as np
+    from pyspark import SparkContext
+
+    be, jtype, view = _JAVA_ARRAYS[dtype]
+    sc = SparkContext._active_spark_context
+    buf = np.asarray(vec, dtype=be)
+    jarr = sc._gateway.new_array(getattr(sc._jvm, jtype), len(buf))
+    getattr(sc._jvm.java.nio.ByteBuffer.wrap(bytearray(buf.tobytes())), view)().get(jarr)
+    return F.lit(jarr)
+
+
+def norm_py(vec) -> float:
+    """Sequential-fold L2 norm — bit-identical to :func:`l2_norm`'s
+    ``aggregate`` and the oracle's list_sum fold (do NOT use math.fsum or
+    numpy: a different summation would break score parity)."""
+    import math
+
+    s = 0.0
+    for x in vec:
+        s += float(x) * float(x)
+    return math.sqrt(s)
 
 
 def _as_double(v: Column) -> Column:
@@ -53,6 +100,12 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     separate ``dot``/``l2_norm`` folds, and the final expression keeps the
     ``dot / (sqrt(na)*sqrt(nb))`` shape, so scores are bit-identical to the
     unfused form (and to the DuckDB oracle).
+
+    When one side is a constant (a query vector), use
+    :func:`cosine_to_query` — what ``cosine_topk`` scores with. It is cheaper
+    because it allocates no per-element struct: the query norm is folded
+    once on the driver, and each row folds one plain ``x*y`` dot and one
+    ``x*x`` norm, with identical scores.
     """
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
@@ -81,6 +134,25 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
             acc["d"] / (F.sqrt(acc["na"]) * F.sqrt(acc["nb"])),
         ),
     )
+
+
+def cosine_to_query(a: Column | str, query_vec) -> Column:
+    """Cosine of every row's vector against one constant query vector —
+    the hoisted-norm form of :func:`cosine_similarity` with identical
+    scores.
+
+    The query's norm is a driver-side constant (:func:`norm_py`, the same
+    left-to-right fold), the query itself one :func:`vec_lit` literal, and
+    each row folds its own norm once: ``dot(a, q) / nullif(|a|*|q|, 0)``
+    is the fused form's ``dot / (sqrt(na)*sqrt(nb))`` evaluated in the same
+    order, NULL where the denominator is zero (a zero-norm row or an
+    all-zero query). ``nullif`` rather than ``when(den != 0, dot/den)``
+    keeps the row's norm fold single: Catalyst does not share a
+    sub-expression between a CASE WHEN's condition and its only branch.
+    """
+    a = F.col(a) if isinstance(a, str) else a
+    den = l2_norm(a) * F.lit(norm_py(query_vec))
+    return dot(a, vec_lit(query_vec)) / F.nullif(den, F.lit(0.0))
 
 
 def l2_normalize(a: Column | str) -> Column:

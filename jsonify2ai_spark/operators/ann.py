@@ -30,24 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jsonify2ai_spark.functions.vectors import cosine_similarity
+from jsonify2ai_spark.functions.vectors import cosine_to_query, norm_py, vec_lit
 from jsonify2ai_spark.session import local_rows_df
-
-
-def _vec_lit(vec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
-
-
-def _norm_py(vec: list[float]) -> float:
-    """Sequential-fold L2 norm — bit-identical to l2_norm's aggregate() and
-    the oracle's list_sum fold (do NOT use math.fsum: higher precision would
-    break score parity)."""
-    import math
-
-    s = 0.0
-    for x in vec:
-        s += float(x) * float(x)
-    return math.sqrt(s)
 
 
 def centroid_scores(vector: Column, centroids: list[list[float]]) -> Column:
@@ -61,13 +45,13 @@ def centroid_scores(vector: Column, centroids: list[list[float]]) -> Column:
     """
     from jsonify2ai_spark.functions.vectors import dot, l2_norm
 
-    cnorms = [_norm_py(c) for c in centroids]
+    cnorms = [norm_py(c) for c in centroids]
 
     def mk(nv: Column) -> Column:
         sims = []
         for c, cn in zip(centroids, cnorms):
             denom = nv * F.lit(cn)
-            sims.append(F.when(denom != 0, dot(vector, _vec_lit(c)) / denom))
+            sims.append(F.when(denom != 0, dot(vector, vec_lit(c)) / denom))
         return F.array(*sims)
 
     return F.element_at(F.transform(F.array(l2_norm(vector)), mk), 1)
@@ -291,7 +275,7 @@ def quantized_ivf_topk(
 
     probe = probe_clusters(query_vec, centroids, n_probe)
     qq = quantize_query_py(query_vec)
-    qlit = F.array(*[F.lit(int(x)) for x in qq])
+    qlit = vec_lit(qq, "int")
     pruned = index.filter(F.col("cluster").isin(probe))
     if where is not None:
         pruned = pruned.filter(where)
@@ -577,7 +561,7 @@ def pq_encode(
     )
 
     def _dist(m: int, c: int) -> Column:
-        cb = F.array(*[F.lit(float(x)) for x in codebooks[m][c]])
+        cb = vec_lit(codebooks[m][c])
         terms = F.zip_with(
             F.col(f"_s{m}"), cb, lambda x, y: (x - y) * (x - y)
         )
@@ -698,14 +682,12 @@ def pq_ivf_topk(
     computed once driver-side, riding a broadcast frame keyed on
     ``cluster``. Still zero per-row vector arithmetic; every sum keeps
     its fixed order, so the q161 oracle replays it exactly."""
-    import math
-
     n_sub = len(codebooks)
     probe = probe_clusters(query_vec, centroids, n_probe)
     ds = len(codebooks[0][0])
     qv = [float(x) for x in query_vec]
     qsubs = [qv[m * ds : (m + 1) * ds] for m in range(n_sub)]
-    qnorm = math.sqrt(_seq_sum([x * x for x in qv]))
+    qnorm = norm_py(qv)
     dot_flat = [
         _seq_sum([a * b for a, b in zip(qsubs[m], cb)])
         for m in range(n_sub)
@@ -864,8 +846,6 @@ def pq_ivf_topk_batch(
     serves a residual-encoded index: the per-(query, cluster) q·c term
     joins the query frame, the query-independent (cluster, cnorm,
     x_lut) terms ride their own broadcast frame."""
-    import math
-
     from pyspark.sql import Window
 
     spark = index.sparkSession
@@ -882,7 +862,7 @@ def pq_ivf_topk_batch(
             for m in range(n_sub)
             for cb in codebooks[m]
         ]
-        qnorm = math.sqrt(_seq_sum([x * x for x in qv]))
+        qnorm = norm_py(qv)
         for cl in probe_clusters(qv, centroids, n_probe):
             qc = _seq_sum(
                 [a * float(b) for a, b in zip(qv, centroids[cl])]
@@ -966,7 +946,7 @@ def ivf_topk(
         assigned = ivf_assign(df.select(id_col, vector_col), centroids, vector_col)
     pruned = assigned.filter(F.col("cluster").isin(probe))
     scored = pruned.withColumn(
-        "score", cosine_similarity(F.col(vector_col), _vec_lit(query_vec))
+        "score", cosine_to_query(F.col(vector_col), query_vec)
     )
     out = (
         scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
@@ -1691,8 +1671,7 @@ class IVFIndex:
                 *[
                     F.array(
                         *[
-                            F.array(*[F.lit(float(x)) for x in cv])
-                            for cv in self._codebooks[m]
+                            vec_lit(cv) for cv in self._codebooks[m]
                         ]
                     )
                     for m in range(len(self._codebooks))

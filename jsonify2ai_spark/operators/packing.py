@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jsonify2ai_spark.functions.vectors import vec_lit
+
 # purge sets up to this size ride the literal-InSet membership path in
 # purge_packed_bins; larger sets switch to the broadcast-hash-set Arrow
 # probe (crossover measured between 100 and 1000 ids at sf0.1 — literal
@@ -401,7 +403,7 @@ def semantic_pack_groups(
     bucket = F.lit(0).cast("long")
     dot0 = None
     for i in range(n_bits):
-        g = F.array(*[F.lit(x) for x in semantic_plane(seed, i, dim)])
+        g = vec_lit(semantic_plane(seed, i, dim))
         dot = F.round(
             F.aggregate(
                 F.zip_with(v, g, lambda a, b: a * b),

@@ -23,7 +23,13 @@ from pyspark.sql import functions as F
 
 from jsonify2ai_spark.session import local_rows_df
 
-from jsonify2ai_spark.functions.vectors import cosine_similarity, dot, l2_norm, l2_normalize
+from jsonify2ai_spark.functions.vectors import (
+    cosine_to_query,
+    dot,
+    l2_norm,
+    l2_normalize,
+    vec_lit,
+)
 
 
 def cosine_topk(
@@ -41,13 +47,17 @@ def cosine_topk(
     reference's filter-inside-kNN, qdrant_client.py:588-593) and reach the
     Parquet scan via pushdown. Ties broken by id columns for determinism.
     Output drops the vector column (reference: with_vectors=False).
+
+    The query is one array literal (:func:`vec_lit`, O(1) JVM calls) and
+    the score is :func:`cosine_to_query` — the query norm folded once on
+    the driver, no per-element struct — bit-identical to
+    ``cosine_similarity``.
     """
     if filters is not None:
         df = df.filter(filters)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     score = (
-        dot(F.col(vector_col), q) if pre_normalized
-        else cosine_similarity(F.col(vector_col), q)
+        dot(F.col(vector_col), vec_lit(query_vec)) if pre_normalized
+        else cosine_to_query(F.col(vector_col), query_vec)
     )
     scored = df.withColumn("score", score)
     order = [F.col("score").desc()] + [F.col(c).asc() for c in id_cols]

@@ -77,6 +77,114 @@ def test_cosine_identities(spark):
     assert abs(r["self"] - 1.0) < 1e-12
 
 
+def _bits(rows):
+    """(id, score bits) — float.hex tells -0.0 from 0.0 where == cannot."""
+    return [(i, None if s is None else s.hex()) for i, s in rows]
+
+
+def test_cosine_topk_bit_identical_to_fused_cosine(spark):
+    """cosine_topk's hoisted-norm kernel (driver-folded query norm, one
+    array literal) scores exactly as the fused ``cosine_similarity`` over
+    a per-element literal array did — same bits, same order — on an
+    ``array<float>`` column of random non-dyadic values, a zero-norm row
+    (NULL score, ranked last), an all-zero query (all NULL), a filtered
+    call and the pre-normalized dot path."""
+    import random
+
+    from jsonify2ai_spark.functions.vectors import dot
+    from jsonify2ai_spark.operators.search import cosine_topk
+
+    rng = random.Random(7)
+    dim, n = 24, 40
+    rows = [(0, 0, [0.0] * dim)] + [
+        (i, i % 3, [rng.uniform(-3.0, 3.0) / 7.0 for _ in range(dim)])
+        for i in range(1, n)
+    ]
+    df = spark.createDataFrame(rows, "id long, grp int, v array<float>")
+    q = [rng.uniform(-1.0, 1.0) / 3.0 for _ in range(dim)]
+
+    def old_lit(vec):
+        return F.array(*[F.lit(float(x)) for x in vec])
+
+    def fused(frame, vec, score=cosine_similarity):
+        ranked = frame.select(
+            "id", score(F.col("v"), old_lit(vec)).alias("score")
+        ).orderBy(F.col("score").desc(), F.col("id").asc())
+        return [(r["id"], r["score"]) for r in ranked.collect()]
+
+    def topk(frame, vec, **kw):
+        hits = cosine_topk(frame, vec, k=n, vector_col="v", **kw).collect()
+        return [(r["id"], r["score"]) for r in hits]
+
+    want = fused(df, q)
+    got = topk(df, q)
+    assert _bits(got) == _bits(want)
+    assert got[-1] == (0, None)  # zero-norm row: NULL, ranked last
+    assert sum(s is None for _, s in got) == 1
+
+    zero = topk(df, [0.0] * dim)
+    assert len(zero) == n and all(s is None for _, s in zero)
+    assert _bits(zero) == _bits(fused(df, [0.0] * dim))
+
+    flt = F.col("grp") == 1
+    got_f = topk(df, q, filters=flt)
+    assert {i for i, _ in got_f} == {r[0] for r in rows if r[1] == 1}
+    assert _bits(got_f) == _bits(fused(df.filter(flt), q))
+
+    unit = df.withColumn("v", l2_normalize("v")).filter(F.col("id") > 0)
+    got_n = topk(unit, q, pre_normalized=True)
+    assert _bits(got_n) == _bits(fused(unit, q, score=dot))
+
+
+def _py4j_calls(spark, monkeypatch, build) -> int:
+    """Py4J round trips the driver makes while ``build()`` runs, not
+    counting the ``m d`` releases of garbage-collected Java references
+    (their number follows Python's collector, not the work done)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        build()
+    finally:
+        monkeypatch.setattr(client, "send_command", send)
+    return calls[0]
+
+
+def test_query_literal_costs_constant_jvm_calls(spark, monkeypatch):
+    """Building a top-k plan or the IVF centroid scores costs the same
+    number of JVM calls at any vector dim (a per-element ``F.lit`` array
+    costs 4 per element), and the query reaches the plan as ONE array
+    literal, not a CreateArray of dim literals."""
+    from jsonify2ai_spark.operators.ann import centroid_scores
+    from jsonify2ai_spark.operators.search import cosine_topk
+
+    df = spark.createDataFrame([(1, [1.0, 2.0])], "id long, v array<double>")
+
+    def topk_plan(dim):
+        return cosine_topk(df, [0.1 * (j + 1) for j in range(dim)], vector_col="v")
+
+    def centroid_col(dim):
+        cents = [[0.5 * c + 0.01 * j for j in range(dim)] for c in range(3)]
+        return df.select(centroid_scores(F.col("v"), cents).alias("s"))
+
+    for build in (topk_plan, centroid_col):
+        build(8)  # warm: first-use class lookups are not per-dim work
+        small = _py4j_calls(spark, monkeypatch, lambda: build(8))
+        large = _py4j_calls(spark, monkeypatch, lambda: build(256))
+        assert small == large, (build.__name__, small, large)
+
+    analyzed = topk_plan(256)._jdf.queryExecution().analyzed().toString()
+    assert "array(" not in analyzed  # no CreateArray node for the query
+    assert "[0.1,0.2," in analyzed  # the literal prints as one array
+
+
 def test_text_normalization(spark):
     df = spark.createDataFrame([("  a\t\tb\r\nc  ",)], ["t"])
     r = df.select(
